@@ -1,0 +1,31 @@
+package graft.vecbench
+
+/** Minimal JSON rendering for the result line and the trace file. */
+object Json {
+  def render(v: Any): String = v match {
+    case null => "null"
+    case s: String => quote(s)
+    case b: Boolean => b.toString
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case m: collection.Map[_, _] =>
+      m.map { case (k, x) => quote(k.toString) + ":" + render(x) }.mkString("{", ",", "}")
+    case xs: Iterable[_] => xs.map(render).mkString("[", ",", "]")
+    case other => quote(other.toString)
+  }
+
+  private def quote(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case '\n' => b ++= "\\n"
+      case '\r' => b ++= "\\r"
+      case '\t' => b ++= "\\t"
+      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
+      case c => b += c
+    }
+    (b += '"').toString
+  }
+}
