@@ -76,7 +76,7 @@ object GraftDb {
     * marker in every standing index's one-row meta (ivf, lsh, and the
     * flat filterstats receipt), so capability dispatch reads one column
     * instead of sniffing for the columns a feature happened to add
-    * (the `n_total`-probe pattern [[GraftDb#lshIndexNTotal]] had to use
+    * (the `n_total`-probe pattern [[GraftDb#nTotalOf]] had to use
     * for the v1 era). Version history: 1 (implicit — receipts WITHOUT
     * the column; capabilities still inferred by column presence, which
     * the readers retain for exactly those legacy receipts), 2 (carries
@@ -95,6 +95,17 @@ object GraftDb {
     * wrong rows into the target's logs — unlike serving, there is no
     * safe degraded route). */
   val BundleV = 1
+
+  /** What one family contributes to a standing-artifact generation: its
+    * receipt columns (between the shared leading `index_seq` and the
+    * trailing `format_version`, `ancestors`, `prev_gen`), its artifact
+    * writers (each handed the staging dir), the members its archived
+    * generation copies besides the receipt, and a hook run right after
+    * the swap. */
+  private final case class Generation(metaCols: Seq[Column],
+                                      writes: Seq[String => Unit],
+                                      archived: Seq[String],
+                                      afterSwap: () => Unit = () => ())
 
   /** One chunk-changelog record. `op` ∈ upsert | delete_chunk |
     * delete_doc (doc-level rows carry chunk_id = -1). Chunks carry an
@@ -1117,14 +1128,15 @@ final class GraftDb(spark: SparkSession, val root: String) {
     // chase the DERIVED serving artifacts (the p12 discipline): a standing
     // index still carries the purged chunks' text + vectors in its lists —
     // rebuild every index from the post-purge snapshot (stale ones drop).
-    // The library's ARCHIVED model generations drop first: ivf centroids
-    // are trained on (and a seed id literally names) the purged data,
-    // and an lsh receipt reproduces rankings OVER it — purge outranks
-    // time-travel reproducibility (the scrubArchives rule applied to
-    // models) — approximate pins fall back to exact; the refresh below
-    // re-archives one clean post-purge generation.
-    fs.delete(new Path(ivfArchiveRoot(libId)), true)
-    fs.delete(new Path(lshArchiveRoot(libId)), true)
+    // The library's ARCHIVED generations drop first, EVERY family: ivf
+    // centroids are trained on (and a seed id literally names) the purged
+    // data, an lsh receipt reproduces rankings OVER it, and archived
+    // filterstats (flat included) count the purged chunks' metadata
+    // values — purge outranks time-travel reproducibility (the
+    // scrubArchives rule applied to models) — approximate pins fall back
+    // to exact; the refresh below re-archives one clean post-purge
+    // generation.
+    families.foreach(f => fs.delete(new Path(f.archive(libId)), true))
     refreshIndexes()
     val liveAudits = Seq("chunks_log" -> chunkLog, "documents_log" -> docLog).map {
       case (name, log) =>
@@ -1151,21 +1163,16 @@ final class GraftDb(spark: SparkSession, val root: String) {
       spark.range(1).select(lit(name).as("log"), lit(remaining).as("n_remaining"))
     }
     val idxAudits = Seq(
-      derivedAudit("ivf_index", s"${indexRoot(libId)}/lists"),
-      derivedAudit("lsh_index", s"${lshIndexRoot(libId)}/keys"))
-    // stale archived model generations remaining, BOTH families (anything
-    // but the live index's own generation covers pre-purge data): 0 on
+      derivedAudit(ivfFam.name, s"${ivfFam.live(libId)}/lists"),
+      derivedAudit(lshFam.name, s"${lshFam.live(libId)}/keys"))
+    // stale archived generations remaining, EVERY family (anything but
+    // the live artifact's own generation covers pre-purge data): 0 on
     // success
-    val liveGen = indexMetaRow(libId).map(_.getAs[Long]("index_seq"))
-    val staleModels = archivedIndexGens(libId).filterNot(liveGen.contains).length.toLong
-    val liveLshGen = lshIndexMeta(libId).map(_._1)
-    val staleLshModels = archivedGens(lshArchiveRoot(libId))
-      .filterNot(liveLshGen.contains).length.toLong
-    val modelAudits = Seq(
-      spark.range(1).select(
-        lit("ivf_index_archive").as("log"), lit(staleModels).as("n_remaining")),
-      spark.range(1).select(
-        lit("lsh_index_archive").as("log"), lit(staleLshModels).as("n_remaining")))
+    val modelAudits = families.map { f =>
+      val stale = archivedGens(f.archive(libId)).filterNot(f.gen(libId).contains).length
+      spark.range(1).select(lit(s"${f.name}_archive").as("log"),
+        lit(stale.toLong).as("n_remaining"))
+    }
     (liveAudits ++ archAudits ++ idxAudits ++ modelAudits)
       .reduce(_ unionAll _).orderBy("log")
   }
@@ -1383,10 +1390,36 @@ final class GraftDb(spark: SparkSession, val root: String) {
       case None => (chunkLog, libLog)
     }
 
-  // ---- persisted serving index (standing IVF lists, maintained at compact) -
+  // ---- standing artifacts: one family table, one generation protocol -----
 
-  private def ivfIndexArea = s"$root/ivf_index"
-  private def indexRoot(libId: Long) = s"$ivfIndexArea/lib=$libId"
+  /** One standing-artifact family — what a library's `index_type` keeps
+    * beside the logs: [[buildIndex]]'s ivf lists, [[buildLshIndex]]'s key
+    * table, [[buildFlatStats]]'s filterstats. A family's live generation
+    * sits at `<index_type>_index/lib=<id>` and its archived generations
+    * at `<index_type>_index_archive/lib=<id>/gen=<index_seq>`; every
+    * per-family site reads this table instead of naming paths. */
+  private final class Family(val indexType: String) {
+    val name = s"${indexType}_index"
+    val area = s"$root/$name"
+    val archiveArea = s"${area}_archive"
+    def live(libId: Long): String = s"$area/lib=$libId"
+    def archive(libId: Long): String = s"$archiveArea/lib=$libId"
+    /** The live generation's one-row receipt (index_seq + the family's
+      * columns), None when the library has no standing artifact — the
+      * serving dispatch bit. */
+    def meta(libId: Long): Option[org.apache.spark.sql.Row] =
+      readMetaCached(s"${live(libId)}/meta").headOption
+    def gen(libId: Long): Option[Long] = meta(libId).map(_.getAs[Long]("index_seq"))
+  }
+
+  // lazy: [[repairIndexSwaps]] reads the table from the CONSTRUCTOR
+  // (recoverPendingCompact), before plain vals this far down initialize
+  private lazy val ivfFam = new Family("ivf")
+  private lazy val lshFam = new Family("lsh")
+  private lazy val flatFam = new Family("flat")
+  private lazy val families = Seq(ivfFam, lshFam, flatFam)
+  private def familyOf(indexType: String): Option[Family] =
+    families.find(_.indexType == indexType)
 
   /** Driver cache of the one-row index metas (ivf/lsh/flat), keyed by
     * path: the serving dispatch reads these on EVERY call, and the
@@ -1461,33 +1494,12 @@ final class GraftDb(spark: SparkSession, val root: String) {
 
   private def invalidateIndexMeta(): Unit = indexMetaCache.clear()
 
-  /** The standing index's one-row metadata (index_seq + the last
-    * maintenance decision receipt), None when the library has no
-    * persisted index — the serving dispatch bit. */
-  private def indexMetaRow(libId: Long): Option[org.apache.spark.sql.Row] =
-    readMetaCached(s"${indexRoot(libId)}/meta").headOption
-
-  /** The full prior-generation lineage a meta carries (`ancestors`,
-    * ascending gen ids — every build that ever stood, ARCHIVED OR NOT:
-    * each build appends its predecessor's index_seq read from the LIVE
-    * meta, which exists even when that predecessor's archive write
-    * crashed, so crashed-archive generations still appear in every
-    * successor's list). Empty for a first build or a meta predating the
-    * field (r16-era receipts — [[coveringArchivedGen]] then falls back
-    * to the single-link `prev_gen` rule). */
-  private def metaAncestors(metaPath: String): Seq[Long] =
-    readMetaCached(metaPath).headOption.toSeq.flatMap { m =>
-      if (m.schema.fieldNames.contains("ancestors"))
-        Option(m.getSeq[Long](m.fieldIndex("ancestors"))).getOrElse(Seq.empty)
-      else Seq.empty
-    }
-
-  /** The lineage the build NOW swapping in must record: its
-    * predecessor's lineage plus the predecessor itself (empty for a
-    * first build). Captured BEFORE the swap replaces the meta it
-    * reads — same discipline as the `prev_gen` capture. */
-  private def nextAncestors(metaPath: String, prevGen: Long): Seq[Long] =
-    if (prevGen < 0) Seq.empty else metaAncestors(metaPath) :+ prevGen
+  /** A receipt's build population — None for an lsh receipt written
+    * before `n_total` existed (the format_version-1 era sniff; the
+    * adaptive filter decision then stays on the probe route:
+    * legacy-safe). */
+  private def nTotalOf(m: org.apache.spark.sql.Row): Option[Long] =
+    if (m.schema.fieldNames.contains("n_total")) Some(m.getAs[Long]("n_total")) else None
 
   /** The centroid matrix the standing index was BUILT with — stored
     * inside the index directory so the swap is atomic for everything
@@ -1501,7 +1513,7 @@ final class GraftDb(spark: SparkSession, val root: String) {
     Long, (Option[Long], Array[(Long, Array[Double])])]()
 
   private def indexCentroids(libId: Long): Array[(Long, Array[Double])] = {
-    val p = s"${indexRoot(libId)}/centroids"
+    val p = s"${ivfFam.live(libId)}/centroids"
     val sig = metaSignature(p)
     indexCentroidCache.get(libId) match {
       case Some((s, m)) if sig.isDefined && s == sig => m
@@ -1546,18 +1558,15 @@ final class GraftDb(spark: SparkSession, val root: String) {
     *      full drift — aggressive by construction: the seeding corpus
     *      changing IS drift (and exactly why the stage-1 seed compare
     *      is a sound training trigger).
-    *   3. BUILD the winner's artifacts under `*_building`, then swap
-    *      (aside → in → drop): cluster-partitioned lists carrying the
-    *      full chunk payload (so metadata filters and includeChunk serve
-    *      off the pruned scan), the v53 K-row size sidecar, the winning
+    *   3. BUILD the winner's artifacts through the shared generation
+    *      protocol ([[publishGeneration]]: stage, `_complete`, aside
+    *      swap, archive): cluster-partitioned lists carrying the full
+    *      chunk payload (so metadata filters and includeChunk serve off
+    *      the pruned scan), the v53 K-row size sidecar, the winning
     *      centroid matrix, and a one-row meta (index_seq = the last
-    *      folded op + the decision receipt, [[indexAudit]]). A
-    *      `_complete` marker gates crash recovery ([[repairIndexSwaps]]):
-    *      a half-written build is discarded, a half-finished swap is
-    *      completed, and serving meanwhile falls back to the in-memory
-    *      route — never a half-index. On retrain the library's trained
-    *      model artifact is refreshed to the winner, so the in-memory
-    *      fallback and the index always agree.
+    *      folded op + the decision receipt, [[indexAudit]]). On retrain
+    *      the library's trained model artifact is refreshed to the
+    *      winner, so the in-memory fallback and the index always agree.
     *
     * [[compact]] calls this for every trained live ivf library (the
     * measured replacement for the reference's unconditional
@@ -1567,9 +1576,7 @@ final class GraftDb(spark: SparkSession, val root: String) {
     * the same assignment) without any rebuild. A library whose live set
     * shrank to empty drops its index instead (serving falls back). */
   def buildIndex(libId: Long, driftDen: Long = 60L, occFactor: Long = 4L): Unit = labeled(s"build-index lib=$libId") {
-    val lib = libRecord(libId)
-    require(lib.getAs[String]("index_type") == "ivf",
-      s"library $libId is ${lib.getAs[String]("index_type")}, not ivf")
+    requireIndexType(libId, "ivf")
     val oldMat = trainedMat(libId).getOrElse(
       throw new IllegalArgumentException(
         s"library $libId has no trained model — call trainIndex first"))
@@ -1591,207 +1598,214 @@ final class GraftDb(spark: SparkSession, val root: String) {
         col("metadata"), col("cluster_id"))
     val sizeRows = assignedOld.groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("n")).collect() // K rows: bounded
-    if (sizeRows.isEmpty) { // nothing live: drop the standing index
-      fs.delete(new Path(indexRoot(libId)), true)
-      invalidateIndexMeta()
-      return
-    }
-    val bld = s"${indexRoot(libId)}_building"
-    fs.delete(new Path(bld), true)
-    val total = sizeRows.map(_.getAs[Long]("n")).sum
-    val maxList = sizeRows.map(_.getAs[Long]("n")).max
-    val occTrips =
-      BigInt(maxList) * BigInt(oldMat.length) >= BigInt(occFactor) * BigInt(total)
-    // seed-population compare: k rows of driver state (trainedMat sorts
-    // by cid, and the matrix's cids are its init chunk ids). The collect
-    // carries the VECTORS too (k rows — same driver bound): it doubles as
-    // stage 2's candidate init, which used to be a second identical job.
-    val params = trainParams(libId)
-    val seedRows: Option[Array[(Long, Array[Double])]] = params.map { case (kc, _) =>
-      emb.orderBy("vec_id").limit(kc).collect().map { r =>
-        (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray)
-      }
-    }
-    val seedChanged = seedRows.exists(_.map(_._1).toSeq != oldMat.map(_._1).toSeq)
-    // drift under the OLD matrix: how much of the corpus no longer sits
-    // where the standing lists recorded it — one FULL OUTER join against
-    // the lists, zero k-means. All three change kinds count: ADDED
-    // (no lists row), MOVED (clusters differ), and DELETED (a lists row
-    // with no live twin — the r15 advisory's blind spot: a corpus shrunk
-    // heavily by deletions must be able to reach the stage-2
-    // train/decide path, exactly as the pre-lazy protocol's candidate
-    // comparison could). No standing lists (first build) reads as full
-    // drift.
-    val standingLists = new Path(s"${indexRoot(libId)}/lists")
-    val preOff =
-      if (!fs.exists(standingLists)) total
-      else assignedOld.select(col("vec_id"), col("cluster_id"))
-        .join(spark.read.parquet(standingLists.toString)
-          .select(col("vec_id"), col("cluster_id").cast("long").as("prev_cluster")),
-          Seq("vec_id"), "full_outer")
-        .filter(col("prev_cluster").isNull || col("cluster_id").isNull ||
-          col("prev_cluster") =!= col("cluster_id"))
-        .count()
-    val preDriftTrips = BigInt(preOff) * BigInt(driftDen) >= BigInt(total)
-    // the standing build's gen id BEFORE this build — the archive
-    // chain's `prev_gen` link ([[coveringArchivedGen]]) — plus the full
-    // lineage (`ancestors`, r17: the transitive chain that single link
-    // couldn't carry); captured here because the swap below replaces
-    // the meta this reads
-    val prevGen = indexMetaRow(libId).map(_.getAs[Long]("index_seq")).getOrElse(-1L)
-    val lineage = nextAncestors(s"${indexRoot(libId)}/meta", prevGen)
-
-    val diagReport: Seq[(Long, Long, Long)] =
-      sizeRows.toSeq.map(r => (r.getLong(0), r.getLong(0), r.getAs[Long]("n")))
-    val (retrain, winner, offDiag, assigned, reportRows) =
-      if (!(occTrips || seedChanged || preDriftTrips)) {
-        // KEEP, decided at stage 1: zero training iterations, one
-        // assignment pass total. Diagonal retrain report from the
-        // stage-1 sizes (candidate ≡ standing by the untripped signals);
-        // off_diag records the measured under-threshold drift.
-        (false, oldMat, preOff, assignedOld, diagReport)
-      } else {
-        // STAGE 2: a signal tripped — train the candidate with the
-        // recorded recipe (None → keep-only for legacy artifacts or a
-        // corpus smaller than its own k) and build the full old→candidate
-        // migration matrix; `from` rides the stage-1 assignment, so this
-        // pass evaluates only the candidate side.
-        val cand: Option[Array[(Long, Array[Double])]] = params.flatMap {
-          case (kc, it) =>
-            // corpus provably unchanged since the standing model trained
-            // (no mutation of ANY kind has bumped the in-JVM epoch) ⇒ the
-            // candidate is bit-identical to the standing model by training
-            // determinism — reuse it instead of re-running k-means for an
-            // identical matrix (the migration matrix and every decision
-            // below are unchanged by construction; the first build right
-            // after trainIndex lands here via the no-standing-lists
-            // full-drift trip). Any append/compact/purge bumps the epoch
-            // and restores the real candidate training.
-            if (trainEpoch.get(libId).contains(mutationEpoch)) Some(oldMat)
-            else {
-              val init = seedRows.get // the stage-1 seed collect, reused
-              if (init.length < kc) None
-              else Some(Ivf.trainCentroids(spark, emb, it, Some(init)))
-            }
+    // nothing live (zero size rows) drops the standing index
+    publishGeneration(ivfFam, libId, empty = sizeRows.isEmpty) {
+      val total = sizeRows.map(_.getAs[Long]("n")).sum
+      val maxList = sizeRows.map(_.getAs[Long]("n")).max
+      val occTrips =
+        BigInt(maxList) * BigInt(oldMat.length) >= BigInt(occFactor) * BigInt(total)
+      // seed-population compare: k rows of driver state (trainedMat sorts
+      // by cid, and the matrix's cids are its init chunk ids). The collect
+      // carries the VECTORS too (k rows — same driver bound): it doubles as
+      // stage 2's candidate init, which used to be a second identical job.
+      val params = trainParams(libId)
+      val seedRows: Option[Array[(Long, Array[Double])]] = params.map { case (kc, _) =>
+        emb.orderBy("vec_id").limit(kc).collect().map { r =>
+          (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray)
         }
-        val candMat = cand.getOrElse(oldMat)
-        // old→candidate migration matrix, K²-bounded. When the candidate
-        // IS the standing matrix (the epoch skip, or the keep-only
-        // fallback's getOrElse), the matrix is diagonal BY CONSTRUCTION —
-        // both sides are the same deterministic nearest-centroid function
-        // of the same rows — so it comes from the stage-1 sizes with zero
-        // extra corpus passes (r18; the old shape re-assigned the corpus
-        // to compute a provably-zero off-diagonal). Otherwise one grouped
-        // pass, COLLECTED (≤K² rows): the report file writes from the
-        // collected rows and off_diag sums on the driver, dropping the
-        // read-back job the off_diag aggregate used to pay.
-        val report: Seq[(Long, Long, Long)] =
-          if (candMat eq oldMat) diagReport
-          else assignedOld
-            .withColumn("ncn", Graft.nearestCentroid(col("embedding"), cvecs(candMat)))
-            .select(col("cluster_id").as("from_cid"),
-              element_at(cids(candMat), col("ncn.idx") + 1).as("to_cid"))
-            .groupBy(col("from_cid"), col("to_cid"))
-            .agg(count(lit(1)).as("n_vecs"))
-            .collect().toSeq
-            .map(r => (r.getLong(0), r.getLong(1), r.getAs[Long]("n_vecs")))
-        val off = report.collect { case (f, t, n) if f != t => n }.sum
-        val re = cand.isDefined &&
-          (BigInt(off) * BigInt(driftDen) >= BigInt(total) || occTrips)
-        val w = if (re) candMat else oldMat
-        val a =
-          if (re) Ivf.assignToMat(snap, w, keep = Seq("doc_id", "text", "metadata"))
-            .select(col("vec_id"), col("embedding"), col("doc_id"), col("text"),
-              col("metadata"), col("cluster_id"))
-          else assignedOld
-        (re, w, off, a, report)
       }
-    // 3. BUILD: map-only assignment carrying the payload, partitioned by
-    // the trained cluster ids; sizes from the same assigned frame (≡ the
-    // lists by construction — the claim this block's comment has always
-    // made; r17 dropped the lists read-back); filter stats: the
-    // per-(key, value) frequency table over the indexed snapshot's
-    // metadata dict — v51's decision input maintained WITH the standing
-    // index (p15/p16's ANALYZE family at the facade), so the adaptive
-    // pre/post-filter route ([[filterDecision]]) reads K-ish rows at
-    // query time instead of rescanning the corpus; centroids + meta +
-    // migration report beside them. All six artifacts are independent
-    // derivations of the one cached snapshot / driver state, staged into
-    // the same `*_building` dir — written CONCURRENTLY (guide §2.6,
-    // r18): serially they paid six full job-scheduling latencies before
-    // the `_complete` marker could land.
-    parallelWrites(Seq(
-      () => graft.sources.Sinks.writePartitioned(assigned, s"$bld/lists", "cluster_id"),
-      () => assigned
-        .groupBy(col("cluster_id").cast("long").as("cluster_id"))
-        .agg(count(lit(1)).as("csize"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$bld/sizes"),
-      () => snap.select(explode(col("metadata")).as(Seq("mkey", "mval")))
-        .groupBy(col("mkey"), col("mval"))
-        .agg(count(lit(1)).as("cnt"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$bld/filterstats"),
-      () => reportRows.toDF("from_cid", "to_cid", "n_vecs")
-        .coalesce(1).write.mode("overwrite").parquet(s"$bld/retrain_report"),
-      () => winner.toSeq.map { case (cid, v) => (cid, v) }.toDF("cid", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$bld/centroids"),
-      () => Seq((seq - 1, if (retrain) "retrain" else "keep", offDiag, maxList, total,
-        GraftDb.IndexMetaV, lineage))
-        .toDF("index_seq", "decision", "off_diag", "max_list", "n_total",
-          "format_version", "ancestors")
-        .coalesce(1).write.mode("overwrite").parquet(s"$bld/meta")))
-    fs.create(new Path(s"$bld/_complete"), true).close()
-    // swap: aside → in → drop (repairable at every intermediate state)
-    val live = new Path(indexRoot(libId))
-    val aside = new Path(s"${indexRoot(libId)}_old")
+      val seedChanged = seedRows.exists(_.map(_._1).toSeq != oldMat.map(_._1).toSeq)
+      // drift under the OLD matrix: how much of the corpus no longer sits
+      // where the standing lists recorded it — one FULL OUTER join against
+      // the lists, zero k-means. All three change kinds count: ADDED
+      // (no lists row), MOVED (clusters differ), and DELETED (a lists row
+      // with no live twin — the r15 advisory's blind spot: a corpus shrunk
+      // heavily by deletions must be able to reach the stage-2
+      // train/decide path, exactly as the pre-lazy protocol's candidate
+      // comparison could). No standing lists (first build) reads as full
+      // drift.
+      val standingLists = new Path(s"${ivfFam.live(libId)}/lists")
+      val preOff =
+        if (!fs.exists(standingLists)) total
+        else assignedOld.select(col("vec_id"), col("cluster_id"))
+          .join(spark.read.parquet(standingLists.toString)
+            .select(col("vec_id"), col("cluster_id").cast("long").as("prev_cluster")),
+            Seq("vec_id"), "full_outer")
+          .filter(col("prev_cluster").isNull || col("cluster_id").isNull ||
+            col("prev_cluster") =!= col("cluster_id"))
+          .count()
+      val preDriftTrips = BigInt(preOff) * BigInt(driftDen) >= BigInt(total)
+      val diagReport: Seq[(Long, Long, Long)] =
+        sizeRows.toSeq.map(r => (r.getLong(0), r.getLong(0), r.getAs[Long]("n")))
+      val (retrain, winner, offDiag, assigned, reportRows) =
+        if (!(occTrips || seedChanged || preDriftTrips)) {
+          // KEEP, decided at stage 1: zero training iterations, one
+          // assignment pass total. Diagonal retrain report from the
+          // stage-1 sizes (candidate ≡ standing by the untripped signals);
+          // off_diag records the measured under-threshold drift.
+          (false, oldMat, preOff, assignedOld, diagReport)
+        } else {
+          // STAGE 2: a signal tripped — train the candidate with the
+          // recorded recipe (None → keep-only for legacy artifacts or a
+          // corpus smaller than its own k) and build the full old→candidate
+          // migration matrix; `from` rides the stage-1 assignment, so this
+          // pass evaluates only the candidate side.
+          val cand: Option[Array[(Long, Array[Double])]] = params.flatMap {
+            case (kc, it) =>
+              // corpus provably unchanged since the standing model trained
+              // (no mutation of ANY kind has bumped the in-JVM epoch) ⇒ the
+              // candidate is bit-identical to the standing model by training
+              // determinism — reuse it instead of re-running k-means for an
+              // identical matrix (the migration matrix and every decision
+              // below are unchanged by construction; the first build right
+              // after trainIndex lands here via the no-standing-lists
+              // full-drift trip). Any append/compact/purge bumps the epoch
+              // and restores the real candidate training.
+              if (trainEpoch.get(libId).contains(mutationEpoch)) Some(oldMat)
+              else {
+                val init = seedRows.get // the stage-1 seed collect, reused
+                if (init.length < kc) None
+                else Some(Ivf.trainCentroids(spark, emb, it, Some(init)))
+              }
+          }
+          val candMat = cand.getOrElse(oldMat)
+          // old→candidate migration matrix, K²-bounded. When the candidate
+          // IS the standing matrix (the epoch skip, or the keep-only
+          // fallback's getOrElse), the matrix is diagonal BY CONSTRUCTION —
+          // both sides are the same deterministic nearest-centroid function
+          // of the same rows — so it comes from the stage-1 sizes with zero
+          // extra corpus passes (r18; the old shape re-assigned the corpus
+          // to compute a provably-zero off-diagonal). Otherwise one grouped
+          // pass, COLLECTED (≤K² rows): the report file writes from the
+          // collected rows and off_diag sums on the driver, dropping the
+          // read-back job the off_diag aggregate used to pay.
+          val report: Seq[(Long, Long, Long)] =
+            if (candMat eq oldMat) diagReport
+            else assignedOld
+              .withColumn("ncn", Graft.nearestCentroid(col("embedding"), cvecs(candMat)))
+              .select(col("cluster_id").as("from_cid"),
+                element_at(cids(candMat), col("ncn.idx") + 1).as("to_cid"))
+              .groupBy(col("from_cid"), col("to_cid"))
+              .agg(count(lit(1)).as("n_vecs"))
+              .collect().toSeq
+              .map(r => (r.getLong(0), r.getLong(1), r.getAs[Long]("n_vecs")))
+          val off = report.collect { case (f, t, n) if f != t => n }.sum
+          val re = cand.isDefined &&
+            (BigInt(off) * BigInt(driftDen) >= BigInt(total) || occTrips)
+          val w = if (re) candMat else oldMat
+          val a =
+            if (re) Ivf.assignToMat(snap, w, keep = Seq("doc_id", "text", "metadata"))
+              .select(col("vec_id"), col("embedding"), col("doc_id"), col("text"),
+                col("metadata"), col("cluster_id"))
+            else assignedOld
+          (re, w, off, a, report)
+        }
+      // 3. BUILD: map-only assignment carrying the payload, partitioned by
+      // the trained cluster ids; sizes from the same assigned frame (≡ the
+      // lists by construction — r17 dropped the lists read-back); the
+      // shared filterstats ([[filterStatsWriter]]); the migration report
+      // and the winning centroid matrix. The receipt is
+      // (index_seq, decision, off_diag, max_list, n_total) — the
+      // [[indexAudit]] row. The archived generation keeps the MODEL (K+1
+      // rows — centroids + receipt) plus filterstats for time-travel
+      // serving: [[pinnedSearchAll]] with pinIndexed=true reproduces the
+      // approximate ranking the live route served while this generation
+      // stood. The lists are NOT archived (corpus-sized); assignment is a
+      // pure function of (corpus, matrix), so matrix+meta suffice — the
+      // v56 identity; filterstats let the pin replay the SAME pre/post-
+      // filter route decision the live route took.
+      Generation(
+        metaCols = Seq(lit(if (retrain) "retrain" else "keep").as("decision"),
+          lit(offDiag).as("off_diag"), lit(maxList).as("max_list"), lit(total).as("n_total")),
+        writes = Seq(
+          stage => graft.sources.Sinks.writePartitioned(assigned, s"$stage/lists", "cluster_id"),
+          stage => assigned
+            .groupBy(col("cluster_id").cast("long").as("cluster_id"))
+            .agg(count(lit(1)).as("csize"))
+            .coalesce(1).write.mode("overwrite").parquet(s"$stage/sizes"),
+          filterStatsWriter(snap),
+          stage => reportRows.toDF("from_cid", "to_cid", "n_vecs")
+            .coalesce(1).write.mode("overwrite").parquet(s"$stage/retrain_report"),
+          stage => winner.toSeq.map { case (cid, v) => (cid, v) }.toDF("cid", "centroid")
+            .coalesce(1).write.mode("overwrite").parquet(s"$stage/centroids")),
+        archived = Seq("centroids", "filterstats"),
+        // the trained-model artifact follows the winner (idempotent; a
+        // crash leaving it stale only makes the next candidate comparison
+        // see the same old model again — the index itself stays
+        // self-consistent)
+        afterSwap = () => if (retrain)
+          writeCentroidArtifact(libId, winner, trainParams(libId).map(_._2).getOrElse(0)))
+    }
+  }
+
+  /** THE generation protocol of every standing artifact — one copy for
+    * [[buildIndex]], [[buildLshIndex]] and [[buildFlatStats]]:
+    *   1. an empty library drops its artifact (serving falls back);
+    *   2. the generation stages under `*_building`;
+    *   3. the family's artifacts and the receipt write CONCURRENTLY
+    *      ([[parallelWrites]], guide §2.6 — independent derivations of
+    *      the one cached snapshot, which serially paid one full
+    *      job-scheduling latency each);
+    *   4. a `_complete` marker seals the stage;
+    *   5. swap: aside → in → drop — [[repairIndexSwaps]] finishes or
+    *      discards every intermediate state on open, and serving
+    *      meanwhile falls back to the in-memory route, never a
+    *      half-index;
+    *   6. the generation archives by BYTE COPY of the listed members plus
+    *      the receipt ([[writeArchivedGen]]) — no read-back re-encode;
+    *   7. the cached metas drop.
+    * The receipt carries the chain [[coveringArchivedGen]] validates:
+    * `prev_gen` (the generation standing before this one) and
+    * `ancestors` (its lineage plus itself — every build that ever stood,
+    * archived or not, so a build whose archive write crashed still
+    * appears in every successor's list), both captured from the LIVE
+    * meta before the swap replaces it. A crash BETWEEN the swap and the
+    * archive write leaves a chain gap the pin detects (it then serves
+    * exact instead of replaying the previous generation's model). */
+  private def publishGeneration(f: Family, libId: Long, empty: Boolean)
+                               (build: => Generation): Unit = {
+    val live = new Path(f.live(libId))
+    if (empty) { fs.delete(live, true); invalidateIndexMeta(); return }
+    val g = build
+    val idxSeq = seq - 1
+    val prev = f.meta(libId)
+    val prevGen = prev.fold(-1L)(_.getAs[Long]("index_seq"))
+    val lineage: Seq[Long] = prev.toSeq.flatMap { m =>
+      val i = m.schema.fieldNames.indexOf("ancestors")
+      (if (i < 0) Seq.empty else Option(m.getSeq[Long](i)).getOrElse(Seq.empty)) :+ prevGen
+    }
+    val stage = s"${live}_building"
+    fs.delete(new Path(stage), true)
+    val receipt = spark.range(1).select(
+      (lit(idxSeq).as("index_seq") +: g.metaCols) ++ Seq(
+        lit(GraftDb.IndexMetaV).as("format_version"), typedLit(lineage).as("ancestors"),
+        lit(prevGen).as("prev_gen")): _*)
+    parallelWrites(g.writes.map(w => () => w(stage)) :+
+      (() => receipt.coalesce(1).write.mode("overwrite").parquet(s"$stage/meta")))
+    fs.create(new Path(stage, "_complete"), true).close()
+    val aside = new Path(s"${live}_old")
     if (fs.exists(live)) fs.rename(live, aside)
-    fs.rename(new Path(bld), live)
+    fs.rename(new Path(stage), live)
     if (fs.exists(aside)) fs.delete(aside, true)
-    // the trained-model artifact follows the winner (idempotent; a crash
-    // leaving it stale only makes the next candidate comparison see the
-    // same old model again — the index itself stays self-consistent)
-    if (retrain) writeCentroidArtifact(libId, winner, trainParams(libId).map(_._2).getOrElse(0))
-    // archive this generation's MODEL (K+1 rows — centroids + receipt)
-    // for time-travel serving: [[pinnedSearchAll]] with pinIndexed=true
-    // reproduces the approximate ranking the live route served while
-    // this generation stood. The lists are NOT archived (corpus-sized);
-    // assignment is a pure function of (corpus, matrix), so matrix+meta
-    // suffice — the v56 identity. Staged write + `prev_gen` chain link
-    // ([[writeArchivedGen]]): a crash mid-write leaves only an ignored
-    // `_building` dir (repaired on open), and a crash BETWEEN the swap
-    // and this write leaves a chain gap [[coveringArchivedGen]] detects
-    // — the pin then falls back to exact instead of silently replaying
-    // the PREVIOUS generation's model (the r15 advisory). A retention
-    // job may delete old `gen=` dirs, which only narrows how far back
-    // the approximate pin reaches.
-    writeArchivedGen(s"${ivfArchiveRoot(libId)}/gen=${seq - 1}") { b =>
-      archiveCopyDir(s"${indexRoot(libId)}/centroids", s"$b/centroids")
-      // filterstats ride the archive (metadata-DOMAIN-sized, never the
-      // corpus) so a pinned approximate search can replay the SAME
-      // pre/post-filter route decision the live route took at the pin —
-      // without them a historically-selective filter that served the
-      // exact branch would be replayed through the probe route
-      archiveCopyDir(s"${indexRoot(libId)}/filterstats", s"$b/filterstats")
-      spark.read.parquet(s"${indexRoot(libId)}/meta")
-        .withColumn("prev_gen", lit(prevGen))
-        .coalesce(1).write.mode("overwrite").parquet(s"$b/meta")
+    g.afterSwap()
+    writeArchivedGen(s"${f.archive(libId)}/gen=$idxSeq") { b =>
+      (g.archived :+ "meta").foreach(m => archiveCopyDir(s"$live/$m", s"$b/$m"))
     }
     invalidateIndexMeta()
   }
 
-  private def ivfArchiveArea = s"$root/ivf_index_archive"
-  private def ivfArchiveRoot(libId: Long) = s"$ivfArchiveArea/lib=$libId"
-  private def lshArchiveArea = s"$root/lsh_index_archive"
-  private def lshArchiveRoot(libId: Long) = s"$lshArchiveArea/lib=$libId"
-  private def flatArchiveArea = s"$root/flat_index_archive"
-  private def flatArchiveRoot(libId: Long) = s"$flatArchiveArea/lib=$libId"
+  /** The per-(key, value) frequency table over a generation's snapshot
+    * metadata — v51's decision input, maintained WITH every standing
+    * artifact (p15/p16's ANALYZE family at the facade), so the adaptive
+    * pre/post-filter route ([[filterDecision]]) reads K-ish rows at query
+    * time instead of rescanning the corpus. Metadata-DOMAIN-sized, so it
+    * rides every archived generation too. */
+  private def filterStatsWriter(snap: DataFrame): String => Unit = stage =>
+    snap.select(explode(col("metadata")).as(Seq("mkey", "mval")))
+      .groupBy(col("mkey"), col("mval"))
+      .agg(count(lit(1)).as("cnt"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$stage/filterstats")
 
-  /** Stage-then-rename write of one archived model generation — the
-    * index swap's `*_building`/`_complete` discipline applied to the
-    * archive (the r15 advisory: a plain post-swap overwrite could leave
-    * a half-written `gen=` dir that fails every later pin). A crash
-    * mid-write leaves an incomplete `_building` dir that readers never
-    * see and [[repairIndexSwaps]] discards; rebuilding the same gen id
-    * (an idempotent re-run) replaces the old dir atomically. */
   /** Byte-level copy of one just-written artifact dir into the archive
     * stage (r18) — the archive's provenance guarantee made literal:
     * archived ≡ live BY THE COPY, not by a re-read re-encode. The r17
@@ -1812,6 +1826,13 @@ final class GraftDb(spark: SparkSession, val root: String) {
     }
   }
 
+  /** Stage-then-rename write of one archived model generation — the
+    * index swap's `*_building`/`_complete` discipline applied to the
+    * archive (the r15 advisory: a plain post-swap overwrite could leave
+    * a half-written `gen=` dir that fails every later pin). A crash
+    * mid-write leaves an incomplete `_building` dir that readers never
+    * see and [[repairIndexSwaps]] discards; rebuilding the same gen id
+    * (an idempotent re-run) replaces the old dir atomically. */
   private def writeArchivedGen(genDir: String)(write: String => Unit): Unit = {
     val bld = new Path(s"${genDir}_building")
     fs.delete(bld, true)
@@ -1833,9 +1854,6 @@ final class GraftDb(spark: SparkSession, val root: String) {
       .collect { case n if n.startsWith("gen=") && !n.endsWith("_building") =>
         n.stripPrefix("gen=").toLong }
   }
-
-  private def archivedIndexGens(libId: Long): Seq[Long] =
-    archivedGens(ivfArchiveRoot(libId))
 
   /** The archived generation COVERING pin `s` under `rootDir`, validated
     * against the archive CHAIN: every gen's receipt names its
@@ -1898,27 +1916,19 @@ final class GraftDb(spark: SparkSession, val root: String) {
 
   // ---- persisted LSH index (standing key rows, same discipline) -----------
 
-  private def lshIndexArea = s"$root/lsh_index"
-  private def lshIndexRoot(libId: Long) = s"$lshIndexArea/lib=$libId"
+  /** The standing LSH key table's recorded (nTables, nBits, seed), None
+    * when the library has no persisted key table. Serving uses the
+    * standing index ONLY when the call's parameters match the recorded
+    * ones — a mismatched call falls back to in-memory keying (correct,
+    * unaccelerated) instead of probing wrong buckets. */
+  private def lshParams(libId: Long): Option[(Int, Int, Long)] =
+    lshFam.meta(libId).map(m =>
+      (m.getAs[Int]("n_tables"), m.getAs[Int]("n_bits"), m.getAs[Long]("seed")))
 
-  /** The standing LSH index's recorded parameters + covered sequence,
-    * None when the library has no persisted key table. Serving uses the
-    * standing index ONLY when the call's (nTables, nBits, seed) match
-    * the recorded ones — a mismatched call falls back to in-memory
-    * keying (correct, unaccelerated) instead of probing wrong buckets. */
-  private def lshIndexMeta(libId: Long): Option[(Long, Int, Int, Long)] =
-    readMetaCached(s"${lshIndexRoot(libId)}/meta").headOption.map(m =>
-      (m.getAs[Long]("index_seq"), m.getAs[Int]("n_tables"),
-        m.getAs[Int]("n_bits"), m.getAs[Long]("seed")))
-
-  /** The lsh meta receipt's build population — None for a receipt
-    * written before `n_total` existed (the format_version-1 era sniff;
-    * the adaptive filter decision then stays on the probe route:
-    * legacy-safe). */
-  private def lshIndexNTotal(libId: Long): Option[Long] =
-    readMetaCached(s"${lshIndexRoot(libId)}/meta").headOption
-      .filter(_.schema.fieldNames.contains("n_total"))
-      .map(_.getAs[Long]("n_total"))
+  private def requireIndexType(libId: Long, t: String): Unit = {
+    val have = libRecord(libId).getAs[String]("index_type")
+    require(have == t, s"library $libId is $have, not $t")
+  }
 
   /** BUILD/REFRESH the library's standing LSH key table — the lsh twin
     * of [[buildIndex]]: SimHash keys are a PER-VECTOR function, so the
@@ -1926,152 +1936,66 @@ final class GraftDb(spark: SparkSession, val root: String) {
     * persisted `(vec_id, doc_id, table_id, key)` table the bucket-union
     * search joins directly, instead of re-keying the whole snapshot on
     * every call (nTables passes over every live vector, per search).
-    * Same crash discipline as the ivf build: `*_building` + `_complete`
-    * + aside-swap, repaired on open; [[compact]] refreshes it with the
-    * parameters the standing index recorded. Serving is BASE+DELTA
-    * ([[persistedLshHits]]), so post-build upserts stay visible with no
-    * rebuild. An empty library drops its index. */
+    * Same generation protocol as the ivf build ([[publishGeneration]]);
+    * [[compact]] refreshes it with the parameters the standing index
+    * recorded. Serving is BASE+DELTA ([[persistedLshHits]]), so
+    * post-build upserts stay visible with no rebuild. An empty library
+    * drops its index. The receipt is (index_seq, n_tables, n_bits, seed,
+    * n_total); the archived generation keeps it plus filterstats — for
+    * lsh the receipt IS the model: keys are a pure per-vector function of
+    * (corpus, params), so the receipt + the pinned fold reproduce the
+    * bucket-route ranking the live route served while this generation
+    * stood ([[pinnedSearchAll]] with pinIndexed=true). */
   def buildLshIndex(libId: Long, nTables: Int = 4, nBits: Int = 10,
                     seed: Long = 1000L): Unit = labeled(s"build-lsh-index lib=$libId") {
-    val lib = libRecord(libId)
-    require(lib.getAs[String]("index_type") == "lsh",
-      s"library $libId is ${lib.getAs[String]("index_type")}, not lsh")
+    requireIndexType(libId, "lsh")
     val snap = listChunks(libId)
       .select(col("chunk_id").as("vec_id"), col("embedding"), col("doc_id"),
         col("metadata"))
     // the meta's n_total count doubles as the emptiness probe (r18): the
     // separate limit(1) job told us nothing this count doesn't
     val nTotal = snap.count()
-    if (nTotal == 0L) {
-      fs.delete(new Path(lshIndexRoot(libId)), true)
-      invalidateIndexMeta()
-      return
-    }
-    val bld = s"${lshIndexRoot(libId)}_building"
-    fs.delete(new Path(bld), true)
-    // chain link + lineage captured BEFORE the swap replaces the meta
-    // they read
-    val prevGen = lshIndexMeta(libId).map(_._1).getOrElse(-1L)
-    val lineage = nextAncestors(s"${lshIndexRoot(libId)}/meta", prevGen)
-    // keys (doc_id carried THROUGH the key explode — the r17 shape
-    // re-joined the snapshot on vec_id for it: one broadcast per build),
-    // filterstats + n_total (the same adaptive-filter decision inputs the
-    // ivf build writes — for lsh the pre-filter branch is not just
-    // cheaper but better-recall: a survivor that shares no bucket with
-    // the query is invisible to the probe route, while the exact scan of
-    // a tiny survivor set can never miss it) and the meta receipt are
-    // independent derivations → concurrent writes (§2.6, r18).
-    parallelWrites(Seq(
-      () => Lsh.keyRows(snap.select(col("vec_id"), col("embedding"), col("doc_id")),
-          nTables, nBits, seed, keep = Seq("doc_id"))
-        .write.mode("overwrite").parquet(s"$bld/keys"),
-      () => snap.select(explode(col("metadata")).as(Seq("mkey", "mval")))
-        .groupBy(col("mkey"), col("mval"))
-        .agg(count(lit(1)).as("cnt"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$bld/filterstats"),
-      () => Seq((seq - 1, nTables, nBits, seed, nTotal, GraftDb.IndexMetaV, lineage))
-        .toDF("index_seq", "n_tables", "n_bits", "seed", "n_total",
-          "format_version", "ancestors")
-        .coalesce(1).write.mode("overwrite").parquet(s"$bld/meta")))
-    fs.create(new Path(s"$bld/_complete"), true).close()
-    val live = new Path(lshIndexRoot(libId))
-    val aside = new Path(s"${lshIndexRoot(libId)}_old")
-    if (fs.exists(live)) fs.rename(live, aside)
-    fs.rename(new Path(bld), live)
-    if (fs.exists(aside)) fs.delete(aside, true)
-    // archive this generation's MODEL — for lsh that is just the receipt
-    // (nTables, nBits, seed): keys are a pure per-vector function of
-    // (corpus, params), so the receipt + the pinned fold reproduce the
-    // bucket-route ranking the live route served while this generation
-    // stood ([[pinnedSearchAll]] with pinIndexed=true — r15 covered ivf
-    // only; an lsh pin silently degraded to exact). Same staged-write +
-    // `prev_gen` chain discipline as the ivf archive.
-    writeArchivedGen(s"${lshArchiveRoot(libId)}/gen=${seq - 1}") { b =>
-      // filterstats ride the archive for the pinned route-decision
-      // replay (see the ivf twin above)
-      archiveCopyDir(s"${lshIndexRoot(libId)}/filterstats", s"$b/filterstats")
-      spark.read.parquet(s"${lshIndexRoot(libId)}/meta")
-        .withColumn("prev_gen", lit(prevGen))
-        .coalesce(1).write.mode("overwrite").parquet(s"$b/meta")
-    }
-    invalidateIndexMeta()
+    // keys carry doc_id THROUGH the key explode (the r17 shape re-joined
+    // the snapshot on vec_id for it: one broadcast per build); for lsh
+    // the filterstats' pre-filter branch is not just cheaper but
+    // better-recall: a survivor that shares no bucket with the query is
+    // invisible to the probe route, while the exact scan of a tiny
+    // survivor set can never miss it
+    publishGeneration(lshFam, libId, empty = nTotal == 0L)(Generation(
+      metaCols = Seq(lit(nTables).as("n_tables"), lit(nBits).as("n_bits"),
+        lit(seed).as("seed"), lit(nTotal).as("n_total")),
+      writes = Seq(
+        stage => Lsh.keyRows(snap.select(col("vec_id"), col("embedding"), col("doc_id")),
+            nTables, nBits, seed, keep = Seq("doc_id"))
+          .write.mode("overwrite").parquet(s"$stage/keys"),
+        filterStatsWriter(snap)),
+      archived = Seq("filterstats")))
   }
 
   // ---- flat filterstats (the ANALYZE artifact without an index) -----------
 
-  private def flatStatsArea = s"$root/flat_index"
-  private def flatStatsRoot(libId: Long) = s"$flatStatsArea/lib=$libId"
-
-  /** The flat library's standing receipt (build population), None when
-    * no artifact exists — flat serving needs no index, but the adaptive
-    * filter DECISION needs the same filterstats artifact the ivf/lsh
-    * builds write, or a flat library can never report artifact-sourced
-    * counts ([[filterDecision]] uniformity across all three
-    * index_types). */
-  private def flatStatsMeta(libId: Long): Option[(Long, Long)] =
-    readMetaCached(s"${flatStatsRoot(libId)}/meta").headOption.map(m =>
-      (m.getAs[Long]("index_seq"), m.getAs[Long]("n_total")))
-
   /** BUILD/REFRESH a flat library's filterstats artifact — the
     * index-less member of the standing-artifact family: no lists, no
     * key table, just the per-(key, value) metadata frequency table +
-    * the one-row receipt (index_seq, n_total, format_version), under
-    * the same `*_building`/`_complete`/aside-swap crash discipline as
-    * [[buildIndex]]/[[buildLshIndex]] ([[repairIndexSwaps]] covers the
-    * area). Behavior of a flat search never changes — flat IS the
-    * exact pre-filtered scan — but [[filterDecision]]'s receipt gets
-    * real counts and a truthful route for every index_type. One
-    * metadata unpivot of the folded snapshot per [[compact]] — or
+    * the one-row receipt (index_seq, n_total), under the same
+    * generation protocol as [[buildIndex]]/[[buildLshIndex]]
+    * ([[publishGeneration]]). Behavior of a flat search never changes —
+    * flat IS the exact pre-filtered scan — but [[filterDecision]]'s
+    * receipt gets real counts and a truthful route for every
+    * index_type, and the archived generation (filterstats + receipt)
+    * keeps the historical receipt honest ([[pinnedFilterDecision]]).
+    * One metadata unpivot of the folded snapshot per [[compact]] — or
     * LAZILY on the first filtered call ([[ensureFlatStats]]): a store
     * that never compacts still earns the artifact. */
   def buildFlatStats(libId: Long): Unit = labeled(s"build-flat-stats lib=$libId") {
-    val lib = libRecord(libId)
-    require(lib.getAs[String]("index_type") == "flat",
-      s"library $libId is ${lib.getAs[String]("index_type")}, not flat")
-    val snap = listChunks(libId)
-      .select(col("chunk_id").as("vec_id"), col("metadata"))
+    requireIndexType(libId, "flat")
+    val snap = listChunks(libId).select(col("chunk_id").as("vec_id"), col("metadata"))
     // n_total count doubles as the emptiness probe (r18, the lsh twin)
     val nTotal = snap.count()
-    if (nTotal == 0L) {
-      fs.delete(new Path(flatStatsRoot(libId)), true)
-      invalidateIndexMeta()
-      return
-    }
-    val bld = s"${flatStatsRoot(libId)}_building"
-    fs.delete(new Path(bld), true)
-    snap.select(explode(col("metadata")).as(Seq("mkey", "mval")))
-      .groupBy(col("mkey"), col("mval"))
-      .agg(count(lit(1)).as("cnt"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$bld/filterstats")
-    // chain link + lineage captured BEFORE the swap replaces the meta
-    // they read
-    val prevGen = flatStatsMeta(libId).map(_._1).getOrElse(-1L)
-    val lineage = nextAncestors(s"${flatStatsRoot(libId)}/meta", prevGen)
-    Seq((seq - 1, nTotal, GraftDb.IndexMetaV, lineage))
-      .toDF("index_seq", "n_total", "format_version", "ancestors")
-      .coalesce(1).write.mode("overwrite").parquet(s"$bld/meta")
-    fs.create(new Path(s"$bld/_complete"), true).close()
-    val live = new Path(flatStatsRoot(libId))
-    val aside = new Path(s"${flatStatsRoot(libId)}_old")
-    if (fs.exists(live)) fs.rename(live, aside)
-    fs.rename(new Path(bld), live)
-    if (fs.exists(aside)) fs.delete(aside, true)
-    // archive this generation's DECISION INPUTS (filterstats + receipt)
-    // for the pinned route-decision replay — same staged-write +
-    // `prev_gen`/`ancestors` chain as the ivf/lsh archives. r16 covered
-    // ivf+lsh only: a FLAT library's pinned filter receipt re-derived
-    // its counts from the LIVE artifact, so a post-pin rebuild silently
-    // changed the historical receipt ([[pinnedFilterDecision]] now
-    // reads this archive; flat SERVING is exact either way — the
-    // archive makes the receipt honest, not the ranking). Nothing
-    // corpus-sized rides along: filterstats are metadata-DOMAIN-sized.
-    writeArchivedGen(s"${flatArchiveRoot(libId)}/gen=${seq - 1}") { b =>
-      archiveCopyDir(s"${flatStatsRoot(libId)}/filterstats", s"$b/filterstats")
-      spark.read.parquet(s"${flatStatsRoot(libId)}/meta")
-        .withColumn("prev_gen", lit(prevGen))
-        .coalesce(1).write.mode("overwrite").parquet(s"$b/meta")
-    }
-    invalidateIndexMeta()
+    publishGeneration(flatFam, libId, empty = nTotal == 0L)(Generation(
+      metaCols = Seq(lit(nTotal).as("n_total")),
+      writes = Seq(filterStatsWriter(snap)),
+      archived = Seq("filterstats")))
   }
 
   /** Once-per-session lib ids whose flat filterstats build LANDED an
@@ -2092,9 +2016,9 @@ final class GraftDb(spark: SparkSession, val root: String) {
   private def ensureFlatStats(libId: Long): Unit =
     if (!flatStatsEnsured.contains(libId) &&
         libRecord(libId).getAs[String]("index_type") == "flat" &&
-        flatStatsMeta(libId).isEmpty) {
+        flatFam.meta(libId).isEmpty) {
       buildFlatStats(libId)
-      if (flatStatsMeta(libId).nonEmpty) flatStatsEnsured += libId
+      if (flatFam.meta(libId).nonEmpty) flatStatsEnsured += libId
     }
 
   /** Serve an lsh workload off the standing key table, BASE+DELTA: the
@@ -2115,7 +2039,7 @@ final class GraftDb(spark: SparkSession, val root: String) {
       .select(col("chunk_id").as("vec_id")).distinct()
     val deltaDocTombs = deltaLog.filter(col("op") === "delete_doc")
       .select(col("doc_id")).distinct()
-    val keysRead = spark.read.parquet(s"${lshIndexRoot(libId)}/keys")
+    val keysRead = spark.read.parquet(s"${lshFam.live(libId)}/keys")
     val baseKeyed =
       if (baseDead) keysRead.limit(0)
       else keysRead
@@ -2133,7 +2057,7 @@ final class GraftDb(spark: SparkSession, val root: String) {
     * sequence the index covers (the [[embedAudit]] pattern applied to
     * index maintenance). Empty when the library has no persisted index. */
   def indexAudit(libId: Long): DataFrame =
-    indexMetaRow(libId) match {
+    ivfFam.meta(libId) match {
       case None => Seq.empty[(Long, Long, String, Long, Long, Long)]
         .toDF("library_id", "index_seq", "decision", "off_diag", "max_list", "n_total")
       case Some(m) => Seq((libId, m.getAs[Long]("index_seq"), m.getAs[String]("decision"),
@@ -2173,17 +2097,14 @@ final class GraftDb(spark: SparkSession, val root: String) {
     * the receipt: one row per dropped generation. */
   def pruneArchives(keepGens: Int): DataFrame = {
     require(keepGens >= 0, s"keepGens must be >= 0, got $keepGens")
-    val dropped: Seq[(Long, String, Long)] =
-      Seq(("ivf", ivfArchiveArea), ("lsh", lshArchiveArea),
-        ("flat", flatArchiveArea)).flatMap { case (fam, area) =>
-        existingIndexLibs(area).toSeq.sorted.flatMap { libId =>
-          val rootDir = s"$area/lib=$libId"
-          archivedGens(rootDir).sorted.dropRight(keepGens).map { g =>
-            fs.delete(new Path(s"$rootDir/gen=$g"), true)
-            (libId, fam, g)
-          }
+    val dropped: Seq[(Long, String, Long)] = families.flatMap { f =>
+      existingIndexLibs(f.archiveArea).toSeq.sorted.flatMap { libId =>
+        archivedGens(f.archive(libId)).sorted.dropRight(keepGens).map { g =>
+          fs.delete(new Path(s"${f.archive(libId)}/gen=$g"), true)
+          (libId, f.indexType, g)
         }
       }
+    }
     // dropped gens' cached stats are stale by definition; cheap full clear
     archivedStatsCache.clear()
     invalidateIndexMeta()
@@ -2310,31 +2231,29 @@ final class GraftDb(spark: SparkSession, val root: String) {
   private def refreshIndexes(): Unit = {
     val libs = listLibraries().select(col("library_id"), col("index_type"))
       .collect().map(r => r.getLong(0) -> r.getString(1))
-    val liveIvfTrained = libs.collect { case (id, "ivf") if trainedMat(id).isDefined => id }.toSet
-    val liveLsh = libs.collect { case (id, "lsh") => id }.toSet
-    val liveFlat = libs.collect { case (id, "flat") => id }.toSet
-    (existingIndexLibs(ivfIndexArea) -- liveIvfTrained)
-      .foreach(id => fs.delete(new Path(indexRoot(id)), true))
-    (existingIndexLibs(lshIndexArea) -- liveLsh)
-      .foreach(id => fs.delete(new Path(lshIndexRoot(id)), true))
-    (existingIndexLibs(flatStatsArea) -- liveFlat)
-      .foreach(id => fs.delete(new Path(flatStatsRoot(id)), true))
-    // archived model generations follow their library's lifecycle: a
-    // deleted or re-typed library keeps no time-travel models
-    (existingIndexLibs(ivfArchiveArea) -- liveIvfTrained)
-      .foreach(id => fs.delete(new Path(ivfArchiveRoot(id)), true))
-    (existingIndexLibs(lshArchiveArea) -- liveLsh)
-      .foreach(id => fs.delete(new Path(lshArchiveRoot(id)), true))
-    (existingIndexLibs(flatArchiveArea) -- liveFlat)
-      .foreach(id => fs.delete(new Path(flatArchiveRoot(id)), true))
-    liveIvfTrained.foreach(buildIndex(_))
-    liveLsh.foreach { id =>
-      lshIndexMeta(id) match {
-        case Some((_, t, b, s)) => buildLshIndex(id, t, b, s)
+    // the libraries each family keeps an artifact for: every live library
+    // of its index_type — ivf only once trained
+    val keep = families.map { f =>
+      f -> libs.collect {
+        case (id, t) if t == f.indexType && (f != ivfFam || trainedMat(id).isDefined) => id
+      }.toSet
+    }.toMap
+    // stale live artifacts drop; archived generations follow their
+    // library's lifecycle: a deleted or re-typed library keeps no
+    // time-travel models
+    families.foreach { f =>
+      (existingIndexLibs(f.area) -- keep(f)).foreach(id => fs.delete(new Path(f.live(id)), true))
+      (existingIndexLibs(f.archiveArea) -- keep(f))
+        .foreach(id => fs.delete(new Path(f.archive(id)), true))
+    }
+    keep(ivfFam).foreach(buildIndex(_))
+    keep(lshFam).foreach { id =>
+      lshParams(id) match {
+        case Some((t, b, s)) => buildLshIndex(id, t, b, s)
         case None => buildLshIndex(id)
       }
     }
-    liveFlat.foreach(buildFlatStats)
+    keep(flatFam).foreach(buildFlatStats)
     filterStatsCache.clear() // new index generations: cached decisions stale
     flatStatsEnsured.clear() // fresh artifacts: lazy-ensure may run again
     // a purge+rebuild can RE-CREATE a gen dir at the same path (same seq,
@@ -2344,14 +2263,14 @@ final class GraftDb(spark: SparkSession, val root: String) {
     invalidateIndexMeta()
   }
 
-  /** Complete or discard index-swap leftovers on open (the
-    * [[repairScrubLeftovers]] discipline for both index areas): a
+  /** Complete or discard generation-swap leftovers on open (the
+    * [[repairScrubLeftovers]] discipline for every family's area): a
     * live index wins over any sibling; a `_complete`-marked building
     * dir finishes its swap; an incomplete one is discarded; an orphaned
     * aside is restored (an older valid index beats none). */
   private def repairIndexSwaps(): Unit = {
     invalidateIndexMeta()
-    Seq(ivfIndexArea, lshIndexArea, flatStatsArea).foreach { a =>
+    families.map(_.area).foreach { a =>
       val area = new Path(a)
       if (fs.exists(area)) {
         val names = fs.listStatus(area).toSeq.map(_.getPath.getName)
@@ -2376,7 +2295,7 @@ final class GraftDb(spark: SparkSession, val root: String) {
     // archive areas: a `gen=N_building` stage left by a crash either
     // finishes its rename (complete, no live twin) or is discarded —
     // readers ([[archivedGens]]) never see `_building` entries either way
-    Seq(ivfArchiveArea, lshArchiveArea, flatArchiveArea).foreach { a =>
+    families.map(_.archiveArea).foreach { a =>
       val area = new Path(a)
       if (fs.exists(area)) fs.listStatus(area).foreach { lib =>
         if (lib.isDirectory)
@@ -2464,8 +2383,7 @@ final class GraftDb(spark: SparkSession, val root: String) {
     val qs = queries.select(col("qid"), col("qvec"))
     val hits = (indexType, trainedMat(libId)) match {
       case ("lsh", _)
-          if lshIndexMeta(libId).exists { case (_, t, b, s) =>
-            t == nTables && b == nBits && s == seed } =>
+          if lshParams(libId).contains((nTables, nBits, seed)) =>
         if (metadataEq.nonEmpty && selectiveEqFilter(libId, metadataEq, thrDen))
           // PRE-FILTER: for lsh this branch is not just cheaper — it is
           // BETTER-RECALL: a survivor sharing no bucket with the query
@@ -2474,13 +2392,13 @@ final class GraftDb(spark: SparkSession, val root: String) {
           // bucket index has under highly selective filters).
           Knn.topkPerQuery(Knn.scoreAll(emb, qs, "cosine"), "cosine", k)
         else persistedLshHits(libId, qs, emb, k, nTables, nBits, seed,
-          lshIndexMeta(libId).get._1)
+          lshFam.gen(libId).get)
       case ("lsh", _) =>
         // in-memory route: no standing key table (or the call's LSH
         // parameters differ from the recorded ones) — re-key per call
         Lsh.searchIndex(Lsh.keyRows(emb, nTables, nBits, seed), emb, qs,
           nTables, nBits, seed, k)
-      case ("ivf", _) if indexMetaRow(libId).isDefined =>
+      case ("ivf", _) if ivfFam.meta(libId).isDefined =>
         if (metadataEq.nonEmpty && selectiveEqFilter(libId, metadataEq, thrDen))
           // PRE-FILTER: the estimated survivor set is so small that an
           // exact scan of it beats probing the index and filtering after
@@ -2549,20 +2467,8 @@ final class GraftDb(spark: SparkSession, val root: String) {
     * artifact beside their index; flat writes it alone
     * ([[buildFlatStats]]). */
   private def filterStatsSource(libId: Long): Option[(String, Long, Option[Long])] =
-    libRecord(libId).getAs[String]("index_type") match {
-      case "ivf" =>
-        indexMetaRow(libId).map(m =>
-          (indexRoot(libId), m.getAs[Long]("index_seq"),
-            Some(m.getAs[Long]("n_total"))))
-      case "lsh" =>
-        lshIndexMeta(libId).map { case (idxSeq, _, _, _) =>
-          (lshIndexRoot(libId), idxSeq, lshIndexNTotal(libId))
-        }
-      case "flat" =>
-        flatStatsMeta(libId).map { case (idxSeq, nt) =>
-          (flatStatsRoot(libId), idxSeq, Some(nt))
-        }
-      case _ => None
+    familyOf(libRecord(libId).getAs[String]("index_type")).flatMap { f =>
+      f.meta(libId).map(m => (f.live(libId), m.getAs[Long]("index_seq"), nTotalOf(m)))
     }
 
   /** The requested pairs' frequencies + build population, through the
@@ -2673,8 +2579,7 @@ final class GraftDb(spark: SparkSession, val root: String) {
     }
     val route = indexType match {
       case "flat" => "prefilter_exact"
-      case "lsh" if !lshIndexMeta(libId).exists { case (_, t, b, s) =>
-        t == nTables && b == nBits && s == seed } => "inmemory_rekey"
+      case "lsh" if !lshParams(libId).contains((nTables, nBits, seed)) => "inmemory_rekey"
       case _ => if (selective) "prefilter_exact" else "postfilter_probe"
     }
     metadataEq.zip(cc.map(_._1).getOrElse(metadataEq.map(_ => -1L)))
@@ -2727,16 +2632,11 @@ final class GraftDb(spark: SparkSession, val root: String) {
       if (cc.exists { case (cs, n) => selectiveByCounts(cs, n, eq.size, thrDen) })
         "prefilter_exact"
       else "postfilter_probe"
-    libRecordOpt(libId).map(_.getAs[String]("index_type")) match {
-      case Some("flat") =>
-        archived(flatArchiveRoot(libId), flatStatsMeta(libId).map(_._1),
-          _ => "prefilter_exact")
-      case Some("ivf") =>
-        archived(ivfArchiveRoot(libId),
-          indexMetaRow(libId).map(_.getAs[Long]("index_seq")), adaptive)
-      case Some("lsh") =>
-        archived(lshArchiveRoot(libId), lshIndexMeta(libId).map(_._1), adaptive)
-      case _ => receipt(None, "prefilter_exact") // deleted live: pin serves exact
+    libRecordOpt(libId).flatMap(l => familyOf(l.getAs[String]("index_type"))) match {
+      case Some(f) =>
+        archived(f.archive(libId), f.gen(libId),
+          if (f == flatFam) _ => "prefilter_exact" else adaptive)
+      case None => receipt(None, "prefilter_exact") // deleted live: pin serves exact
     }
   }
 
@@ -2765,7 +2665,7 @@ final class GraftDb(spark: SparkSession, val root: String) {
     * vector in the corpus on every query. */
   private def persistedIvfHits(libId: Long, qs: DataFrame, k: Int, nProbes: Int,
                                candFilters: DataFrame => DataFrame): DataFrame = {
-    val idxSeq = indexMetaRow(libId).get.getAs[Long]("index_seq")
+    val idxSeq = ivfFam.gen(libId).get
     val idxMat = indexCentroids(libId)
     val probePairs = probeAssignments(qs, idxMat, nProbes).collect()
       .map(r => (r.getLong(0), r.getLong(1))) // Q×nProbes: workload-bounded
@@ -2780,7 +2680,7 @@ final class GraftDb(spark: SparkSession, val root: String) {
       .select(col("chunk_id").as("vec_id")).distinct()
     val deltaDocTombs = deltaLog.filter(col("op") === "delete_doc")
       .select(col("doc_id")).distinct()
-    val lists = spark.read.parquet(s"${indexRoot(libId)}/lists")
+    val lists = spark.read.parquet(s"${ivfFam.live(libId)}/lists")
       .filter(col("cluster_id").isin(probedClusters: _*)) // partition pruning
     val baseMasked =
       if (baseDead) lists.limit(0)
@@ -2809,6 +2709,53 @@ final class GraftDb(spark: SparkSession, val root: String) {
     Knn.topkPerQuery(baseScored.unionByName(deltaScored), "cosine", k)
   }
 
+  /** Per-generation archived filterstats counts, keyed by gen dir —
+    * archived generations are IMMUTABLE after [[writeArchivedGen]]'s
+    * rename, so entries never need revalidation; request-bounded lazy
+    * fill like [[filterStatsCache]] (the audit/debug replay loop this
+    * feature serves repeats the same pins — it must not pay a driver
+    * parquet read per call, the same r14 advisory the live path
+    * already fixed). */
+  private val archivedStatsCache = scala.collection.mutable.HashMap
+    .empty[String, scala.collection.mutable.HashMap[(String, String), Long]]
+
+  /** The requested pairs' counts + build population from an ARCHIVED
+    * generation's filterstats, through the immutable-gen cache — None
+    * for a legacy gen without filterstats/n_total (r15-era archive).
+    * Shared by the pinned route decision ([[archivedSelectiveEq]]) and
+    * its receipt ([[pinnedFilterDecision]]) so they can never disagree
+    * on the inputs. */
+  private def archivedFilterCounts(genDir: String,
+                                   eq: Seq[(String, String)]): Option[(Seq[Long], Long)] = {
+    val p = s"$genDir/filterstats"
+    val nt = readMetaCached(s"$genDir/meta").headOption.flatMap(nTotalOf)
+    if (nt.isEmpty || !fs.exists(new Path(p))) None
+    else {
+      val counts = archivedStatsCache.getOrElseUpdate(genDir,
+        scala.collection.mutable.HashMap.empty[(String, String), Long])
+      val missing = eq.distinct.filterNot(counts.contains)
+      if (missing.nonEmpty)
+        readFilterPairs(p, missing).foreach { case (pair, c) => counts(pair) = c }
+      Some((eq.map(counts), nt.get))
+    }
+  }
+
+  /** Replay v51's selectivity decision from an ARCHIVED generation's
+    * filterstats + receipt — the route the LIVE route took at the pin
+    * was decided from that generation's artifact, so the pinned replay
+    * must re-run the SAME rule ([[selectiveByCounts]] — one definition)
+    * on the SAME counts or a historically-selective filter that served
+    * the exact pre-filter branch would be replayed through the probe
+    * route (worse recall than history — the one direction a
+    * reproducibility contract can't tolerate). False for a legacy gen
+    * without filterstats/n_total (r15-era archive: decision not
+    * reconstructable — keep the probe route, the r15 behavior). */
+  private def archivedSelectiveEq(genDir: String, eq: Seq[(String, String)],
+                                  thrDen: Long): Boolean =
+    eq.nonEmpty && archivedFilterCounts(genDir, eq).exists { case (cs, n) =>
+      selectiveByCounts(cs, n, eq.size, thrDen)
+    }
+
   /** TIME-TRAVEL SEARCH: the workload served over the [[asOf]]-pinned
     * snapshot — what makes the COW generations operationally useful:
     * reproducing yesterday's retrieval results (audit/debug of
@@ -2834,55 +2781,6 @@ final class GraftDb(spark: SparkSession, val root: String) {
     * archive, a chain gap from a crashed archive write, or a flat
     * library) falls back to the exact contract.
     * The library must have existed at the pin. */
-  /** Per-generation archived filterstats counts, keyed by gen dir —
-    * archived generations are IMMUTABLE after [[writeArchivedGen]]'s
-    * rename, so entries never need revalidation; request-bounded lazy
-    * fill like [[filterStatsCache]] (the audit/debug replay loop this
-    * feature serves repeats the same pins — it must not pay a driver
-    * parquet read per call, the same r14 advisory the live path
-    * already fixed). */
-  private val archivedStatsCache = scala.collection.mutable.HashMap
-    .empty[String, scala.collection.mutable.HashMap[(String, String), Long]]
-
-  /** Replay v51's selectivity decision from an ARCHIVED generation's
-    * filterstats + receipt — the route the LIVE route took at the pin
-    * was decided from that generation's artifact, so the pinned replay
-    * must re-run the SAME rule ([[selectiveByCounts]] — one definition)
-    * on the SAME counts or a historically-selective filter that served
-    * the exact pre-filter branch would be replayed through the probe
-    * route (worse recall than history — the one direction a
-    * reproducibility contract can't tolerate). False for a legacy gen
-    * without filterstats/n_total (r15-era archive: decision not
-    * reconstructable — keep the probe route, the r15 behavior). */
-  /** The requested pairs' counts + build population from an ARCHIVED
-    * generation's filterstats, through the immutable-gen cache — None
-    * for a legacy gen without filterstats/n_total (r15-era archive).
-    * Shared by the pinned route decision ([[archivedSelectiveEq]]) and
-    * its receipt ([[pinnedFilterDecision]]) so they can never disagree
-    * on the inputs. */
-  private def archivedFilterCounts(genDir: String,
-                                   eq: Seq[(String, String)]): Option[(Seq[Long], Long)] = {
-    val p = s"$genDir/filterstats"
-    val nt = readMetaCached(s"$genDir/meta").headOption
-      .filter(_.schema.fieldNames.contains("n_total"))
-      .map(_.getAs[Long]("n_total"))
-    if (nt.isEmpty || !fs.exists(new Path(p))) None
-    else {
-      val counts = archivedStatsCache.getOrElseUpdate(genDir,
-        scala.collection.mutable.HashMap.empty[(String, String), Long])
-      val missing = eq.distinct.filterNot(counts.contains)
-      if (missing.nonEmpty)
-        readFilterPairs(p, missing).foreach { case (pair, c) => counts(pair) = c }
-      Some((eq.map(counts), nt.get))
-    }
-  }
-
-  private def archivedSelectiveEq(genDir: String, eq: Seq[(String, String)],
-                                  thrDen: Long): Boolean =
-    eq.nonEmpty && archivedFilterCounts(genDir, eq).exists { case (cs, n) =>
-      selectiveByCounts(cs, n, eq.size, thrDen)
-    }
-
   private def pinnedSearchAll(libId: Long, queries: DataFrame, k: Int,
                               includeChunk: Boolean,
                               candFilters: DataFrame => DataFrame,
@@ -2921,10 +2819,9 @@ final class GraftDb(spark: SparkSession, val root: String) {
       if (!pinIndexed) exact()
       else libRecordOpt(libId).map(_.getAs[String]("index_type")) match {
         case Some("ivf") =>
-          coveringArchivedGen(ivfArchiveRoot(libId), s,
-            indexMetaRow(libId).map(_.getAs[Long]("index_seq"))) match {
+          coveringArchivedGen(ivfFam.archive(libId), s, ivfFam.gen(libId)) match {
             case Some(g) =>
-              val genDir = s"${ivfArchiveRoot(libId)}/gen=$g"
+              val genDir = s"${ivfFam.archive(libId)}/gen=$g"
               if (readMetaCached(s"$genDir/meta").isEmpty ||
                   archivedSelectiveEq(genDir, metadataEq, thrDen)) exact()
               else {
@@ -2947,10 +2844,9 @@ final class GraftDb(spark: SparkSession, val root: String) {
           // replay with the ARCHIVED receipt's params (never the call's):
           // the ranking being reproduced is the one the standing key
           // table served, and that table was keyed with the receipt
-          coveringArchivedGen(lshArchiveRoot(libId), s,
-            lshIndexMeta(libId).map(_._1)) match {
+          coveringArchivedGen(lshFam.archive(libId), s, lshFam.gen(libId)) match {
             case Some(g) =>
-              val genDir = s"${lshArchiveRoot(libId)}/gen=$g"
+              val genDir = s"${lshFam.archive(libId)}/gen=$g"
               readMetaCached(s"$genDir/meta").headOption match {
                 case Some(m) if !archivedSelectiveEq(genDir, metadataEq, thrDen) =>
                   val (t, b, sd) = (m.getAs[Int]("n_tables"), m.getAs[Int]("n_bits"),

@@ -280,7 +280,7 @@ class GraftDbSpec extends GraftSuite {
     assert(audit === Map("chunks_log" -> 0L, "documents_log" -> 0L,
       "archive:chunks_log" -> 0L, "archive:documents_log" -> 0L,
       "ivf_index" -> 0L, "lsh_index" -> 0L,
-      "ivf_index_archive" -> 0L, "lsh_index_archive" -> 0L))
+      "ivf_index_archive" -> 0L, "lsh_index_archive" -> 0L, "flat_index_archive" -> 0L))
     // storage-level proof: the raw parquet files carry no trace of doc 1
     assert(spark.read.parquet(s"${db.root}/chunks_log")
       .filter(col("doc_id") === 1L).count() === 0L)
@@ -1907,5 +1907,105 @@ class GraftDbSpec extends GraftSuite {
       s"null chunk_id must fail the distinctness admission check, got: ${e.getMessage}")
     // and the failed import wrote NOTHING
     assert(db.listLibraries().filter(col("library_id") === 32L).count() === 0L)
+  }
+
+  test("purgeDocument drops a FLAT library's archived generations: no archived filterstats row keeps the purged document's metadata value") {
+    val db = freshDb()
+    val dims = corpus.head._3.length
+    db.createLibrary(33L, "flatpurge", dims, "flat")
+    db.upsertChunksMeta((0 until 8).map(i =>
+      (33L, if (i < 3) 1L else 2L, 100L + i, corpus(i)._2, corpus(i)._3,
+        Map("owner" -> (if (i < 3) "purge-me-unique" else "keep")))))
+    db.compact() // archives a flat generation whose filterstats count the value
+    // one more op, so the purge's rebuild archives under a NEW gen id
+    // instead of overwriting the pre-purge one
+    db.upsertChunksMeta(Seq((33L, 2L, 120L, corpus(9)._2, corpus(9)._3, Map("owner" -> "keep"))))
+    val arch = new java.io.File(s"${db.root}/flat_index_archive/lib=33")
+    def archivedRows(): Long = Option(arch.listFiles()).toSeq.flatten.map { g =>
+      spark.read.parquet(s"$g/filterstats").filter(col("mval") === "purge-me-unique").count()
+    }.sum
+    assert(archivedRows() > 0L, "precondition: no archived filterstats held the value")
+    val audit = db.purgeDocument(33L, 1L).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(archivedRows() === 0L,
+      "an archived flat filterstats row still holds the purged document's metadata value")
+    assert(audit("flat_index_archive") === 0L, s"stale flat generations survive the purge: $audit")
+  }
+
+  test("crash states of the generation protocol repair on open for every family (ivf, lsh, flat)") {
+    import spark.implicits._
+    import java.nio.file.{Files => JF, Path => JPath, Paths => JP}
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("graftdb").toString
+    val keep = Files.createTempDirectory("graftdb-gen1")
+    val db = new GraftDb(spark, root)
+    val dims = corpus.head._3.length
+    val fams = Seq("ivf" -> 1L, "lsh" -> 2L, "flat" -> 3L)
+    def rows(lib: Long, ids: Range) = ids.map(i =>
+      (lib, i.toLong / 4, i.toLong, corpus(i)._2, corpus(i)._3, Map("lang" -> "en")))
+    fams.foreach { case (t, lib) => db.createLibrary(lib, t, dims, t) }
+    fams.foreach { case (_, lib) => db.upsertChunksMeta(rows(lib, 0 until 12)) }
+    db.trainIndex(1L, kCentroids = 3, iters = 1)
+    db.compact() // generation 1 of every family: n_total 12
+    def live(t: String, lib: Long): JPath = JP.get(s"$root/${t}_index/lib=$lib")
+    def sib(p: JPath, suffix: String): JPath = p.resolveSibling(s"${p.getFileName}$suffix")
+    def copyTree(src: JPath, dst: JPath): Unit =
+      org.apache.commons.io.FileUtils.copyDirectory(src.toFile, dst.toFile)
+    fams.foreach { case (t, lib) => copyTree(live(t, lib), keep.resolve(t)) }
+    fams.foreach { case (_, lib) => db.upsertChunksMeta(rows(lib, 12 until 18)) }
+    db.compact() // generation 2: n_total 18 — the one every repair must serve
+    val gen2 = db.indexAudit(1L).collect().head.getLong(1)
+    def archived(t: String, lib: Long): JPath =
+      JP.get(s"$root/${t}_index_archive/lib=$lib/gen=$gen2")
+    val workload = Seq((0L, corpus(5)._3), (1L, corpus(16)._3)).toDF("qid", "qvec")
+    def hits(d: GraftDb, lib: Long): Set[(Long, Long)] =
+      d.searchAll(lib, workload, k = 5).collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+    val before = fams.map { case (_, lib) => lib -> hits(db, lib) }.toMap
+
+    // (state, fabricate it for one family's artifact, archived gen 2 kept?)
+    val states: Seq[(String, (String, Long) => Unit, Boolean)] = Seq(
+      ("incomplete stage beside the live artifact", (t, lib) => {
+        copyTree(keep.resolve(t), sib(live(t, lib), "_building"))
+        JF.delete(sib(live(t, lib), "_building").resolve("_complete"))
+      }, true),
+      ("complete stage, live renamed aside", (t, lib) => {
+        JF.move(live(t, lib), sib(live(t, lib), "_building"))
+        copyTree(keep.resolve(t), sib(live(t, lib), "_old"))
+      }, true),
+      ("live artifact plus a stale aside", (t, lib) =>
+        copyTree(keep.resolve(t), sib(live(t, lib), "_old")), true),
+      ("aside alone", (t, lib) => JF.move(live(t, lib), sib(live(t, lib), "_old")), true),
+      ("complete archived stage", (t, lib) =>
+        JF.move(archived(t, lib), sib(archived(t, lib), "_building")), true),
+      ("incomplete archived stage", (t, lib) => {
+        JF.move(archived(t, lib), sib(archived(t, lib), "_building"))
+        JF.delete(sib(archived(t, lib), "_building").resolve("_complete"))
+      }, false))
+
+    states.foreach { case (state, crash, archiveKept) =>
+      fams.foreach { case (t, lib) => crash(t, lib) }
+      val reopened = new GraftDb(spark, root)
+      fams.foreach { case (t, lib) =>
+        assert(JF.exists(live(t, lib)), s"$state: the $t artifact was lost on open")
+        val residue = Seq(s"${t}_index", s"${t}_index_archive").flatMap { a =>
+          val p = JP.get(s"$root/$a")
+          if (!JF.exists(p)) Seq.empty
+          else {
+            val w = JF.walk(p)
+            try w.iterator().asScala.map(_.getFileName.toString)
+              .filter(n => n.endsWith("_building") || n.endsWith("_old")).toList
+            finally w.close()
+          }
+        }
+        assert(residue.isEmpty, s"$state: $t residue left after open: $residue")
+        assert(JF.exists(archived(t, lib)) === archiveKept,
+          s"$state: $t archived gen=$gen2 present=${JF.exists(archived(t, lib))}")
+        val served = reopened.filterDecision(lib, Seq("lang" -> "en")).collect().head.getLong(3)
+        assert(served === 18L, s"$state: $t serves n_total $served, not generation 2's 18")
+        assert(hits(reopened, lib) === before(lib), s"$state: $t searchAll diverged after repair")
+      }
+      assert(reopened.indexAudit(1L).collect().head.getLong(1) === gen2,
+        s"$state: ivf serves another generation than $gen2")
+    }
   }
 }

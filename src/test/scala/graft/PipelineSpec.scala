@@ -792,11 +792,11 @@ class PipelineSpec extends GraftSuite {
     // the plan can: the probed scan must read the standing artifact
     val ivf = run("f13_facade_serving")
     ivf.collect()
-    assert(ivf.queryExecution.executedPlan.toString.contains("ivf_index"),
+    assert(PlanScans.roots(ivf).exists(_.contains("/ivf_index/lib=")),
       "f13 fell back to the in-memory ivf route")
     val lsh = run("f14_facade_lsh_serving")
     lsh.collect()
-    assert(lsh.queryExecution.executedPlan.toString.contains("lsh_index"),
+    assert(PlanScans.roots(lsh).exists(_.contains("/lsh_index/lib=")),
       "f14 fell back to in-memory keying — check its params match searchAll defaults")
   }
 
